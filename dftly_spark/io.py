@@ -22,13 +22,83 @@ defaults so every entry point behaves the same way:
 (Spark's default PERMISSIVE) is the wrong default for training-data
 pipelines, where a bad decode should stop the job, not poison the corpus.
 Pass ``mode="PERMISSIVE"`` explicitly to opt in to salvage semantics.
+
+:func:`read_parquet` is the table reader for named parquet files: it keeps a
+schema catalog so only a file's first read pays Spark's footer-reading
+schema-inference job.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _FORMATS = ("parquet", "csv", "jsonl", "orc", "text")
+
+#: Session confs that change the schema Spark infers from a parquet footer;
+#: their values are part of every catalog key.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_GLOB_CHARS = frozenset("{}[]*?\\")
+_CATALOG_SIZE = 256
+_catalog: OrderedDict[tuple, StructType] = OrderedDict()
+_catalog_lock = threading.Lock()
+
+
+def _catalog_key(spark: SparkSession, path: str) -> tuple | None:
+    """Validity key of a local regular file's inferred schema, or ``None``
+    for anything else (relative paths, globs, URIs, directories): those are
+    read by inference every time."""
+    if not os.path.isabs(path) or _GLOB_CHARS.intersection(path):
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    confs = tuple(spark.conf.get(k) for k in _PARQUET_INFERENCE_CONFS)
+    return (os.path.realpath(path), st.st_ino, st.st_mtime_ns, st.st_size) + confs
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read one parquet table, inferring its schema only on the file's first read.
+
+    The first read is a plain ``spark.read.parquet(path)``, so Spark itself
+    infers the schema (a footer-reading Spark job); the schema is kept in a
+    process-wide LRU catalog of :data:`_CATALOG_SIZE` entries.  Later reads
+    pass it back through ``spark.read.schema(...)``, which launches no job
+    and yields the same relation.  Only metadata is cached, never data or
+    plans.  The key is the file's ``(realpath, inode, mtime_ns, size)`` plus
+    the session values of :data:`_PARQUET_INFERENCE_CONFS`, so rewriting the
+    file or flipping one of those confs infers again.  Directories, globs,
+    relative paths and URIs are read by inference every time.
+    """
+    key = _catalog_key(spark, path)
+    if key is not None:
+        with _catalog_lock:
+            schema = _catalog.get(key)
+            if schema is not None:
+                _catalog.move_to_end(key)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        schema = df.schema
+        with _catalog_lock:
+            _catalog[key] = schema
+            while len(_catalog) > _CATALOG_SIZE:
+                _catalog.popitem(last=False)
+    return df
 
 
 def read_table(
@@ -123,4 +193,4 @@ def register_views(spark: SparkSession, sf_dir: str, tables: list[str]) -> None:
     """Expose parquet tables as temp views so ``spark.sql`` queries run
     against them by bare name (the oracle-side setup, Spark-side)."""
     for t in tables:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+        read_parquet(spark, f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)

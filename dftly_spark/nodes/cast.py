@@ -224,18 +224,23 @@ class Cast(Node):
             # (a bare decimal try_cast would ROUND fractions half-up where
             # both the bigint path and Polars truncate/fail):
             if DT.is_float(src_tag):
-                # truncate toward zero, in decimal so 2**63..2**64-1 survive.
-                # Scale 18, not 9: double→decimal rounds HALF_UP at the target
-                # scale BEFORE the floor/ceil, and at scale 9 a double within
-                # 5e-10 below an integer (2.9999999999995) would round up and
-                # floor to 3 where bigint/Polars truncate to 2.  At scale 18
-                # the rounding error (≤5e-19) cannot bridge to the next
-                # integer, and 38-18=20 integer digits still cover U64_MAX
-                # (non-integer doubles are < 2**53; larger ones overflow to
-                # null → cast failure, same as the bigint path).
-                d = src.try_cast("decimal(38,18)")
-                out = F.when(d < 0, F.ceil(d)).otherwise(F.floor(d)).try_cast(
-                    "decimal(20,0)"
+                # The bigint cast truncates toward zero exactly (a decimal
+                # cast would go through the shortest repr string, inexact
+                # from 2**53: 5.653831144296423e17 → …300, exact …304) and
+                # nulls NaN, ±inf and values below -2**63.  From 2**63 shift
+                # into bigint range (exact within that binade) and add 2**63
+                # back in decimal.  The bigint branch stops below 2**63
+                # because Spark saturates a double of exactly 2**63 to
+                # 2**63-1 instead of failing; NaN (which Spark sorts above
+                # every double) and values from 2**64 fall through to null.
+                two63 = F.lit(str(2**63)).cast("decimal(20,0)")
+                shifted = (src - F.lit(float(2**63))).try_cast("bigint")
+                out = F.when(
+                    src < F.lit(float(2**63)),
+                    src.try_cast("bigint").try_cast("decimal(20,0)"),
+                ).when(
+                    src < F.lit(float(2**64)),
+                    (shifted.try_cast("decimal(20,0)") + two63).try_cast("decimal(20,0)"),
                 )
             elif src_tag == DT.STR:
                 # integer strings only — '2.7' must FAIL like bigint/Polars,

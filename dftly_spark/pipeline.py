@@ -77,7 +77,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from . import ops as _ops
-from .io import normalize_event_ts, read_table, write_table
+from .io import normalize_event_ts, read_parquet, read_table, write_table
 from .parser import Parser, _load_yaml
 
 # Every public ops function whose FIRST AND ONLY required DataFrame
@@ -192,7 +192,7 @@ def _read_source(spark: SparkSession, src: dict, sf_dir: str | None) -> DataFram
             from .streaming import stream_table
 
             return stream_table(spark, sf_dir, src["table"])
-        df = spark.read.parquet(f"{sf_dir}/{src['table']}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{src['table']}.parquet")
         if src["table"] == "events":
             df = normalize_event_ts(df)
         return df

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column as SparkColumn
 from pyspark.sql import DataFrame, SparkSession
+from .io import normalize_event_ts, read_parquet
 from .ops.scale import durable_checkpoint
 from pyspark.sql import functions as F
 
@@ -45,7 +46,7 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     path = f"{sf_dir}/{name}.parquet"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     if os.path.isfile(path):
         # The file source requires a directory; expose single-file testdata
         # tables through a symlink directory (read-only, no copy).
@@ -54,8 +55,6 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         path = d
     df = spark.readStream.schema(schema).format("parquet").load(path)
     if name == "events":
-        from .io import normalize_event_ts
-
         df = normalize_event_ts(df)
     return df
 

@@ -190,6 +190,29 @@ def test_select_spec(spark):
     assert [tuple(r) for r in out.collect()] == [(4, -2), (6, -2)]
 
 
+def test_constant_slices_match_python_slicing(spark):
+    """Constant-bound slices equal Python slicing on empty, 1-char,
+    non-ASCII and null strings, over negative, zero, inverted and
+    out-of-range bounds."""
+    from dftly_spark import Parser
+
+    strings = ["", "a", "héllo wörld", "日本語😀x", "abcdefghij", None]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(strings)], "i long, s string")
+    starts = (-100, -3, -1, 0, 1, 3, 100)
+    slices = [(a, None) for a in starts] + [
+        (a, b) for a in starts for b in (-100, -2, 0, 2, 5, 100)
+    ]
+    exprs = {f"$s[{a}:]" if b is None else f"$s[{a}:{b}]": (a, b) for a, b in slices}
+    exprs["$s[0:6][1:3]"] = None
+    cols = {e: Parser.expr_to_spark(e, schema=df) for e in exprs}
+    rows = df.select("i", *[c.alias(f"c{k}") for k, c in enumerate(cols.values())]).collect()
+    for r in rows:
+        v = strings[r.i]
+        for k, (e, ab) in enumerate(exprs.items()):
+            want = None if v is None else (v[0:6][1:3] if ab is None else v[ab[0]:ab[1]])
+            assert r[f"c{k}"] == want, (e, v)
+
+
 def test_hash_distinctness_on_column(spark):
     from dftly_spark import Parser
 

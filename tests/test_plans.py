@@ -97,13 +97,23 @@ def test_broadcast_join_in_ts_diff_query(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_all_contract_queries_plan_invariants(spark):
+@pytest.fixture(scope="module")
+def contract_plans(spark):
+    """Every queries() entry built once at sf0.001: name → executedPlan.
+    Both contract sweeps below assert over this one build pass."""
+    import __spark_entry__ as entry
+
+    return {
+        name: fn(spark, SF_DIR)._jdf.queryExecution().executedPlan()
+        for name, fn in entry.queries().items()
+    }
+
+
+def test_all_contract_queries_plan_invariants(contract_plans):
     """Sweep every queries() entry: no row-at-a-time Python eval anywhere,
     and no cartesian/nested-loop joins except the two sanctioned cases
     (x21's single-row Bloom broadcast; x05/x06/x11/x12's broadcast of a
     tiny query/centroid set is a hash join, so not excepted)."""
-    import __spark_entry__ as entry
-
     nl_allowed = {
         "x21_bloom_pruned_join",  # 1-row Bloom build side
         "x06_cosine_topk",  # exact top-k must score every (query, corpus)
@@ -145,9 +155,8 @@ def test_all_contract_queries_plan_invariants(spark):
         "x122_important_stock",  # 1-row totals broadcast
     }
     arrow_allowed = {"x09_multimodal_decode"}  # sanctioned mapInPandas stub
-    for name, fn in entry.queries().items():
-        df = fn(spark, "/root/testdata/sf0.001")
-        plan = df._jdf.queryExecution().executedPlan().toString()
+    for name, executed in contract_plans.items():
+        plan = executed.toString()
         assert "BatchEvalPython" not in plan, f"{name} has a Python UDF"
         if name not in arrow_allowed:
             assert "ArrowEvalPython" not in plan, f"{name} has an Arrow UDF"
@@ -195,18 +204,14 @@ UNPARTITIONED_WINDOW_ALLOWED = {
 }
 
 
-def test_no_unpartitioned_window_outside_allowlist(spark):
+def test_no_unpartitioned_window_outside_allowlist(contract_plans):
     """Sweep every queries() entry: a WindowExec with an empty partition
     spec moves ALL data to one partition — fatal at 100 TB.  The only
     sanctioned shape is partitioned_cumsum's bucket-offset window (a
     bounded ~64-row frame), pinned per-query above with exact counts so
     a new one can't hide behind an existing allowance."""
-    import __spark_entry__ as entry
-
     got = {}
-    for name, fn in entry.queries().items():
-        df = fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan()
+    for name, plan in contract_plans.items():
         cnt = sum(
             1
             for nd in _iter_physical_nodes(plan)

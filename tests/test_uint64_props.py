@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import given, settings
+import pytest
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from dftly_spark.parser import Parser
@@ -72,23 +73,59 @@ def test_string_cast_matches_model(spark, vals):
     assert got == expect
 
 
-@settings(max_examples=12, deadline=None)
-@given(
-    st.lists(
-        st.floats(
-            min_value=-1e25, max_value=1e25, allow_nan=False, allow_infinity=False
-        ),
-        min_size=1,
-        max_size=30,
-    )
+_FLOATS = st.lists(
+    st.floats(min_value=-1e25, max_value=1e25, allow_nan=False, allow_infinity=False),
+    min_size=1,
+    max_size=30,
 )
+# Doubles at or above 2**53 whose shortest repr is not their exact value,
+# and the edges of the 2**63 binade.
+_WIDE_EXAMPLES = (
+    [5.653831144296423e17],
+    [float(2**60 + 512)],
+    [2.0**53, 2.0**63 - 1024, 2.0**63, 2.0**64 - 2048, 2.0**64],
+)
+
+
+def _float_batch(spark, vals):
+    return spark.createDataFrame([(i, float(v)) for i, v in enumerate(vals)], "i long, d double")
+
+
+@settings(max_examples=12, deadline=None)
+@given(_FLOATS)
+@example(_WIDE_EXAMPLES[0])
+@example(_WIDE_EXAMPLES[1])
+@example(_WIDE_EXAMPLES[2])
 def test_float_cast_truncates_toward_zero(spark, vals):
-    df = spark.createDataFrame([(i, float(v)) for i, v in enumerate(vals)], "i long, d double")
+    df = _float_batch(spark, vals)
     col = Parser.expr_to_spark("$d ::? uint64", schema=df, uint64_decimal=True)
     rows = df.select("i", col.alias("u")).collect()
     got = {r.i: (None if r.u is None else int(r.u)) for r in rows}
     expect = {i: _model_float(v) for i, v in enumerate(vals)}
     assert got == expect
+
+
+@settings(max_examples=12, deadline=None)
+@given(_FLOATS)
+@example(_WIDE_EXAMPLES[0])
+@example(_WIDE_EXAMPLES[1])
+@example(_WIDE_EXAMPLES[2])
+def test_strict_float_cast_truncates_toward_zero(spark, vals):
+    # strict `::` returns the same integers on in-range values and raises
+    # on a batch holding any out-of-range one
+    in_range = [v for v in vals if _model_float(v) is not None]
+    if in_range:
+        df = _float_batch(spark, in_range)
+        col = Parser.expr_to_spark("$d :: uint64", schema=df, uint64_decimal=True)
+        rows = df.select("i", col.alias("u")).collect()
+        assert {r.i: int(r.u) for r in rows} == {
+            i: _model_float(v) for i, v in enumerate(in_range)
+        }
+    if len(in_range) < len(vals):
+        df = _float_batch(spark, vals)
+        col = Parser.expr_to_spark("$d :: uint64", schema=df, uint64_decimal=True)
+        with pytest.raises(Exception, match="strict cast to uint64 failed"):
+            df.select(col).collect()
 
 
 @settings(max_examples=8, deadline=None)
